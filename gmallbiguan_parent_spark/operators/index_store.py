@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table_spread
+from ..session import SessionMemo
 from .dedup import (
     N_BANDS,
     SIMHASH_WIDE_MIN_DOCS,
@@ -569,9 +570,9 @@ def refresh_index(
     return out
 
 
-# session memo of built store roots, keyed on (applicationId, sf_dir,
-# variant); SPARK_GRAFT_INDEX_DIR makes roots stable across sessions
-_ROOT_CACHE: dict[tuple[str, str, str], str] = {}
+# session memo of built store roots, keyed on (sf_dir, variant);
+# SPARK_GRAFT_INDEX_DIR makes roots stable across sessions
+_ROOT_CACHE = SessionMemo()
 
 
 _FAMILY_ARTIFACTS = {
@@ -632,13 +633,15 @@ def ensure_index(
     remains an in-place maintenance job: run it from the single
     maintenance owner, not concurrently with other processes'
     first-use builds.)"""
+    return _ROOT_CACHE.lookup(
+        spark, (sf_dir, variant), lambda: _open_root(spark, sf_dir, variant, build_kwargs)
+    )
+
+
+def _open_root(spark: SparkSession, sf_dir: str, variant: str, build_kwargs: dict) -> str:
+    """ensure_index on a memo miss: adopt, build or take over the root."""
     import shutil
 
-    key = (spark.sparkContext.applicationId, sf_dir, variant)
-    if key in _ROOT_CACHE:
-        return _ROOT_CACHE[key]
-    for k in [k for k in _ROOT_CACHE if k[0] != key[0]]:
-        del _ROOT_CACHE[k]
     base = os.environ.get("SPARK_GRAFT_INDEX_DIR")
     if base:
         root = _shared_root_path(base, sf_dir, variant)
@@ -719,7 +722,6 @@ def ensure_index(
                             shutil.rmtree(aside, ignore_errors=True)
     else:
         build_index(spark, sf_dir, root, **build_kwargs)
-    _ROOT_CACHE[key] = root
     return root
 
 
@@ -869,7 +871,7 @@ def _resume_ledger_compact(ledger: str) -> None:
     os.remove(marker)
 
 
-# staleness verdicts for persisted_root, keyed on (app, root, family,
+# staleness verdicts for persisted_root, keyed on (root, family,
 # corpus file signature) — NOT once-per-session (ADVICE r8: a corpus
 # that grows mid-session, or an external writer's append, must flip the
 # verdict on the NEXT query, or warm reads silently omit every
@@ -877,7 +879,7 @@ def _resume_ledger_compact(ledger: str) -> None:
 # os.stat over the corpus path — O(files) syscalls, no Spark job — so
 # any file added, replaced, or rewritten changes the key and forces one
 # fresh max() scan.
-_FRESH_CACHE: dict[tuple, bool] = {}
+_FRESH_CACHE = SessionMemo()
 
 
 def _corpus_signature(sf_dir: str, table: str) -> tuple:
@@ -954,23 +956,19 @@ def persisted_root(spark: SparkSession, sf_dir: str, family: str) -> str | None:
         if family == "vecs"
         else ("documents", "doc_id", "doc_watermark")
     )
-    key = (
-        spark.sparkContext.applicationId, root, family,
-        _corpus_signature(sf_dir, table),
-    )
-    if key not in _FRESH_CACHE:
-        # evict other sessions' keys AND this (app, root, family)'s
-        # superseded signatures — without the prefix eviction a
-        # frequently-appended corpus leaks one O(file-count) tuple per
-        # mutation for the session's lifetime (r9 self-review)
-        for k in [
-            k for k in _FRESH_CACHE
-            if k[0] != key[0] or k[:3] == key[:3]
-        ]:
-            del _FRESH_CACHE[k]
+
+    def build():
         cur = load_table_spread(spark, sf_dir, table).agg(F.max(id_col)).first()[0]
-        _FRESH_CACHE[key] = cur is None or cur <= m[wm_key]
-    return root if _FRESH_CACHE[key] else None
+        return cur is None or cur <= m[wm_key]
+
+    # a new corpus signature supersedes the (root, family)'s older ones
+    # — a frequently-appended corpus would otherwise hold one
+    # O(file-count) tuple per mutation (r9 self-review)
+    fresh = _FRESH_CACHE.lookup(
+        spark, (root, family, _corpus_signature(sf_dir, table)), build,
+        replaces=lambda old: old[:2] == (root, family),
+    )
+    return root if fresh else None
 
 
 _VEC_ARTIFACT_SET = set(_VEC_ARTIFACTS)
@@ -1234,7 +1232,7 @@ def _slim_wide_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _store_source_tag(spark: SparkSession, sf_dir: str) -> str:
     """The memo source tag of the persisted wide sigs — resolved root +
     manifest vec watermark, so a repointed SPARK_GRAFT_INDEX_DIR or a
-    refreshed store mints a fresh key (the _knn_slim_memo discipline)."""
+    refreshed store mints a fresh key."""
     root = ensure_index(spark, sf_dir)
     return f"store:{root}:{read_manifest(root)['vec_watermark']}"
 

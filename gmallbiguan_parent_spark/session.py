@@ -10,8 +10,10 @@ so results are bit-stable against the DuckDB oracle.
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
+from collections.abc import MutableMapping
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -83,3 +85,68 @@ def get_spark(app_name: str = "gmallbiguan_parent_spark",
             pass  # conf not runtime-settable on this build — builder path covers it
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+class SessionMemo(MutableMapping):
+    """Session memo of intermediates that are pure functions of their
+    key (a corpus path plus variant tags). lookup() is the one place
+    the memo policy lives (DESIGN.md, "Session memos"):
+
+    - keys are (applicationId, *key): checkpoints are context-bound;
+    - a miss first drops every other application's entries and the
+      ones `replaces(old_key)` names as superseded (old_key is given
+      without the application);
+    - a hit needs `valid(value)` and every checkpoint behind a
+      DataFrame in the value (alone or in a tuple) still registered
+      with the context; otherwise it is rebuilt once;
+    - at most MAX_ENTRIES entries, least recently used first out.
+
+    Dropping an entry drops the reference only and never unpersists: a
+    DataFrame handed out earlier may still read those blocks."""
+
+    MAX_ENTRIES = 8
+
+    def __init__(self):
+        self._entries = OrderedDict()  # key -> (value, checkpoint RDD ids)
+
+    def __getitem__(self, key):
+        return self._entries[key][0]
+
+    def __setitem__(self, key, value):
+        self._entries[key] = (value, ())
+
+    def __delitem__(self, key):
+        del self._entries[key]
+
+    def __iter__(self):
+        return iter(self._entries)
+
+    def __len__(self):
+        return len(self._entries)
+
+    def lookup(self, spark: SparkSession, key: tuple, build, replaces=None, valid=None):
+        sc = spark.sparkContext
+        k = (sc.applicationId, *key)
+        hit = self._entries.get(k)
+        if hit is not None and (valid is None or valid(hit[0])) and _live(sc, hit[1]) == hit[1]:
+            self._entries.move_to_end(k)
+            return hit[0]
+        for old in [o for o in self._entries
+                    if o == k or o[0] != k[0] or (replaces and replaces(o[1:]))]:
+            del self._entries[old]
+        value = build()
+        parts = value if isinstance(value, tuple) else (value,)
+        plans = [p._jdf.queryExecution().analyzed() for p in parts if isinstance(p, DataFrame)]
+        ids = [p.rdd().id() for p in plans if p.nodeName() == "LogicalRDD"]
+        self._entries[k] = (value, _live(sc, ids))
+        while len(self._entries) > self.MAX_ENTRIES:
+            self._entries.popitem(last=False)
+        return value
+
+
+def _live(sc, rdd_ids) -> tuple[int, ...]:
+    """The ids in rdd_ids still registered (persisted) with the context."""
+    if not rdd_ids:
+        return ()
+    registered = sc._jsc.sc().getPersistentRDDs()
+    return tuple(i for i in rdd_ids if registered.contains(i))

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from gmallbiguan_parent_spark.session import SessionMemo
 from tests.conftest import SF_DIR
 
 DOC_WM = 350   # subset build indexes doc_id/vec_id <= this; refresh gets the rest
@@ -203,7 +204,7 @@ def test_env_root_makes_fresh_session_read_only(spark, tmp_path, monkeypatch):
     import gmallbiguan_parent_spark.operators.index_store as ix
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "stable"))
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    monkeypatch.setattr(ix, "_ROOT_CACHE", SessionMemo())
     root1 = ix.ensure_index(spark, SF_DIR)
     stamp = (tmp_path / "stable").stat()
 
@@ -212,7 +213,7 @@ def test_env_root_makes_fresh_session_read_only(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         ix, "build_index", lambda *a, **k: calls.append(1) or real_build(*a, **k)
     )
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})  # simulate a new application
+    monkeypatch.setattr(ix, "_ROOT_CACHE", SessionMemo())  # simulate a new application
     root2 = ix.ensure_index(spark, SF_DIR)
     assert root2 == root1
     assert calls == [], "existing manifest must short-circuit the build"
@@ -613,7 +614,7 @@ def test_old_layout_store_upgraded_on_ensure(spark, tmp_path, monkeypatch):
     import gmallbiguan_parent_spark.operators.index_store as ix
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    monkeypatch.setattr(ix, "_ROOT_CACHE", SessionMemo())
     root = ix.ensure_index(spark, SF_DIR)
     manifest_before = ix.read_manifest(root)
 
@@ -622,7 +623,7 @@ def test_old_layout_store_upgraded_on_ensure(spark, tmp_path, monkeypatch):
     import shutil
 
     shutil.rmtree(f"{root}/srp_sigs_wide")
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})  # new application
+    monkeypatch.setattr(ix, "_ROOT_CACHE", SessionMemo())  # new application
     root2 = ix.ensure_index(spark, SF_DIR)
     assert root2 == root
     assert os.path.isdir(f"{root}/srp_sigs_wide"), "layout not upgraded"
@@ -636,7 +637,7 @@ def test_old_layout_store_upgraded_on_ensure(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         ix, "build_index", lambda *a, **k: calls.append(1) or real_build(*a, **k)
     )
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    monkeypatch.setattr(ix, "_ROOT_CACHE", SessionMemo())
     assert ix.ensure_index(spark, SF_DIR) == root
     assert calls == []
 
@@ -681,7 +682,7 @@ def test_crashed_wide_compaction_heals_without_rebuild(spark, tmp_path, monkeypa
     import gmallbiguan_parent_spark.operators.index_store as ix
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    monkeypatch.setattr(ix, "_ROOT_CACHE", SessionMemo())
     root = ix.ensure_index(spark, SF_DIR)
     # simulate the mid-swap crash: artifact moved aside, stage gone
     os.replace(f"{root}/srp_sigs_wide", f"{root}/_old_srp_sigs_wide")
@@ -691,7 +692,7 @@ def test_crashed_wide_compaction_heals_without_rebuild(spark, tmp_path, monkeypa
     monkeypatch.setattr(
         ix, "build_index", lambda *a, **k: calls.append(1) or real_build(*a, **k)
     )
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})  # new application
+    monkeypatch.setattr(ix, "_ROOT_CACHE", SessionMemo())  # new application
     assert ix.ensure_index(spark, SF_DIR) == root
     assert calls == [], "crashed compaction must heal, not rebuild"
     assert os.path.isdir(f"{root}/srp_sigs_wide")
@@ -714,12 +715,12 @@ def test_persisted_root_never_takes_over_old_layout(spark, tmp_path, monkeypatch
     import gmallbiguan_parent_spark.operators.index_store as ix
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    monkeypatch.setattr(ix, "_ROOT_CACHE", SessionMemo())
     root = ix.ensure_index(spark, SF_DIR)
     shutil.rmtree(f"{root}/srp_sigs_wide")  # simulate the pre-r9 layout
     manifest_mtime = os.path.getmtime(f"{root}/{ix.MANIFEST}")
 
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})  # new application
+    monkeypatch.setattr(ix, "_ROOT_CACHE", SessionMemo())  # new application
     ix._FRESH_CACHE.clear()
     assert ix.persisted_root(spark, SF_DIR, "vecs") is None
     assert ix.persisted_root(spark, SF_DIR, "docs") is None

@@ -18,6 +18,8 @@
 
 from __future__ import annotations
 
+from gmallbiguan_parent_spark.session import SessionMemo
+
 SF_DIR = "/root/testdata/sf0.01"
 
 
@@ -164,7 +166,7 @@ def test_publish_graph_watermark_drift_retry(spark, tmp_path, monkeypatch):
     import gmallbiguan_parent_spark.operators.index_store as ix
 
     sf = "/root/testdata/sf0.001"
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    monkeypatch.setattr(ix, "_ROOT_CACHE", SessionMemo())
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     root = ix.ensure_index(spark, sf)
 
@@ -268,7 +270,7 @@ def test_staged_ingest_src_memo(spark, tmp_path, monkeypatch):
 
     import gmallbiguan_parent_spark.streaming.queries as sq
 
-    monkeypatch.setattr(sq, "_INGEST_STAGE_CACHE", {})
+    monkeypatch.setattr(sq, "_INGEST_STAGE_CACHE", SessionMemo())
     monkeypatch.setattr(sq, "_scratch", lambda p: str(tmp_path / f"{p}x"))
     s1 = sq._staged_ingest_src(spark, SF_DIR, "documents", 4)
     # no _SUCCESS yet: the memo must NOT serve the unstaged path

@@ -11,7 +11,15 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from gmallbiguan_parent_spark.session import SessionMemo
 from tests.conftest import SF_DIR
+
+
+class _Fake:
+    """Stands in for the confirmed-pair relation in memo-policy tests."""
+
+    def localCheckpoint(self, eager=True):
+        return self
 
 
 def test_overflow_counts_match_directed_candidates(spark):
@@ -53,7 +61,7 @@ def test_capped_graph_store_read_matches_live(spark, tmp_path, monkeypatch):
     live = sorted(map(tuple, knn_graph_wide_capped(spark, SF_DIR).collect()))
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    monkeypatch.setattr(ix, "_ROOT_CACHE", SessionMemo())
     ix._FRESH_CACHE.clear()
     store = sorted(
         map(tuple, ix.knn_graph_capped_from_index(spark, SF_DIR).collect())
@@ -70,7 +78,7 @@ def test_pre_v2_layout_store_upgraded_on_ensure(spark, tmp_path, monkeypatch):
     import gmallbiguan_parent_spark.operators.index_store as ix
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    monkeypatch.setattr(ix, "_ROOT_CACHE", SessionMemo())
     root = ix.ensure_index(spark, SF_DIR)
     assert ix.read_manifest(root)["layout"] == ix._LAYOUT_VERSION
 
@@ -81,7 +89,7 @@ def test_pre_v2_layout_store_upgraded_on_ensure(spark, tmp_path, monkeypatch):
         json.dump(m, f)
     assert not ix._layout_current(root)
 
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})  # new application
+    monkeypatch.setattr(ix, "_ROOT_CACHE", SessionMemo())  # new application
     ix._FRESH_CACHE.clear()
     assert ix.persisted_root(spark, SF_DIR, "vecs") is None  # reader: live
     root2 = ix.ensure_index(spark, SF_DIR)  # index path: swap-upgrade
@@ -135,19 +143,17 @@ def test_no_trailing_empty_batch_scope_restores_conf(spark):
     assert spark.conf.get(key) == prev
 
 
-def test_mp_confirmed_memo_policy(spark, monkeypatch):
+def test_mp_confirmed_memo_policy(spark, monkeypatch, tmp_path):
     """Memo policy of the shared confirmed-pair relation: live and ONE
     store entry of a corpus coexist (alternating live / from_index
     calls must not thrash the checkpoint); a superseded store tag of
-    the same corpus is evicted on insert; other corpora untouched."""
+    the same corpus is evicted on insert; other corpora untouched; a
+    live insert drops the store entries whose root lost its manifest."""
     import gmallbiguan_parent_spark.operators.similarity as sim
-
-    class _Fake:
-        def localCheckpoint(self, eager=True):
-            return self
+    from gmallbiguan_parent_spark.operators.index_store import MANIFEST
 
     monkeypatch.setattr(sim, "_mp_confirmed_pairs", lambda s, m: _Fake())
-    monkeypatch.setattr(sim, "_MP_CONF_CACHE", {})
+    monkeypatch.setattr(sim, "_MP_CONF_CACHE", SessionMemo())
     cache = sim._MP_CONF_CACHE
     app = spark.sparkContext.applicationId
 
@@ -163,6 +169,35 @@ def test_mp_confirmed_memo_policy(spark, monkeypatch):
     # the radius layout never shares a tag prefix with the wide layout
     sim._mp_confirmed_memo(spark, "/c1", "radius:live", None, [])
     assert (app, "/c1", "wide:store:/r:11") in cache
+    # the store went away (no manifest under /r): a live insert of the
+    # same corpus and layout drops its entry; a store that still has
+    # its manifest keeps coexisting with live
+    (tmp_path / MANIFEST).write_text("{}")
+    sim._mp_confirmed_memo(spark, "/c3", f"wide:store:{tmp_path}:1", None, [])
+    sim._mp_confirmed_memo(spark, "/c2", "wide:live", None, [])
+    sim._mp_confirmed_memo(spark, "/c3", "wide:live", None, [])
+    assert (app, "/c2", "wide:store:/r:10") not in cache
+    assert (app, "/c3", f"wide:store:{tmp_path}:1") in cache
+    assert (app, "/c1", "wide:store:/r:11") in cache, "other corpus evicted"
+
+
+def test_session_memo_keeps_at_most_8_entries(spark, monkeypatch):
+    """Each session memo holds at most 8 entries, least recently used
+    first out: 12 corpora through the confirmed-pair memo leave 8, and
+    the newest corpus keeps both its live and its store entry."""
+    import gmallbiguan_parent_spark.operators.similarity as sim
+
+    monkeypatch.setattr(sim, "_mp_confirmed_pairs", lambda s, m: _Fake())
+    monkeypatch.setattr(sim, "_MP_CONF_CACHE", SessionMemo())
+    cache = sim._MP_CONF_CACHE
+    app = spark.sparkContext.applicationId
+
+    for i in range(12):
+        sim._mp_confirmed_memo(spark, f"/c{i}", "wide:live", None, [])
+        sim._mp_confirmed_memo(spark, f"/c{i}", "wide:store:/r:10", None, [])
+    assert len(cache) <= 8
+    assert (app, "/c11", "wide:live") in cache
+    assert (app, "/c11", "wide:store:/r:10") in cache
 
 
 def test_build_threads_equal_artifacts(spark, tmp_path, monkeypatch):
